@@ -18,7 +18,9 @@ BENCH.json).
 
 Execution is measured with the noop sink (full plan runs, nothing
 lands on the driver) after a warm-up action so JVM/codegen startup is
-not billed to the first query. BENCH_RUNS>1 takes the median.
+not billed to the first query. BENCH_RUNS>1 takes the median. Every
+timed run goes through ``dumbo_spark.session.time_noop``, so every run
+starts from a cleared cache with no persistent RDDs.
 """
 
 from __future__ import annotations
@@ -28,8 +30,11 @@ import os
 import statistics
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from dumbo_spark.session import get_session, time_noop  # noqa: E402
 
 # Representative subset: one+ per SURVEY §2 family, all perf-sensitive
 # paths (fact⋈fact joins, dedup family, ANN family, windows, streaming
@@ -426,9 +431,7 @@ def core_suite_names(registered: set[str]) -> list[str]:
     return sorted(n for n, r in m["excluded"].items() if r == _CORE_REASON)
 
 
-def core_suite_pass(
-    spark, queries, sf_dir: str, release_persistent_rdds
-) -> tuple[float, dict[str, float]]:
+def core_suite_pass(spark, queries, sf_dir: str) -> tuple[float, dict[str, float]]:
     """One timed noop-write pass over every sub-second-core name.
 
     Single pass (not median-of-3): the row's job is regression
@@ -438,13 +441,8 @@ def core_suite_pass(
     pinpointed without re-running the sweep."""
     detail: dict[str, float] = {}
     for n in core_suite_names(set(queries)):
-        t0 = time.perf_counter()
-        queries[n].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        detail[n] = round(time.perf_counter() - t0, 3)
-        spark.catalog.clearCache()
-        release_persistent_rdds(spark)
+        build = partial(queries[n].fn, spark, sf_dir)
+        detail[n] = round(time_noop(spark, build), 3)
     return round(sum(detail.values()), 3), detail
 
 
@@ -558,7 +556,6 @@ def adjudicate(
     sf_dir: str,
     timings: dict[str, float],
     close_map: dict[str, float] | None,
-    release_persistent_rdds,
     extra_runners: dict | None = None,
 ) -> dict:
     """Self-adjudicate window contention (VERDICT r13 Next #1).
@@ -604,20 +601,18 @@ def adjudicate(
         suspects = suspects[:ADJ_MAX_ROWS]
     out["calib_spark_sec"] = spark_calib(spark)
     for ratio, name, sweep_sec, close_sec in suspects:
+        # synthetic rows (core_suite) re-run via their own runner;
+        # registry rows re-run through the standard timed noop write
+        runner = (extra_runners or {}).get(name)
         runs = []
         for _ in range(3):
-            t0 = time.perf_counter()
-            # synthetic rows (core_suite) re-run via their own runner;
-            # registry rows re-run as the standard noop write
-            if extra_runners and name in extra_runners:
-                extra_runners[name]()
+            if runner:
+                t0 = time.perf_counter()
+                runner()
+                sec = time.perf_counter() - t0
             else:
-                queries[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            runs.append(round(time.perf_counter() - t0, 3))
-            spark.catalog.clearCache()
-            release_persistent_rdds(spark)
+                sec = time_noop(spark, partial(queries[name].fn, spark, sf_dir))
+            runs.append(round(sec, 3))
         iso = round(statistics.median(runs), 3)
         out["rows"][name] = {
             "sweep_sec": sweep_sec,
@@ -730,13 +725,9 @@ def build_record(
         for n in sorted(top15)
     }
     # VERDICT r15 Next #2c: per-run samples for EVERY query, in run
-    # order. The sweep clears caches between queries but not between
-    # the 3 runs of one query, so run 1 of a persist-heavy operator is
-    # its true cold cost and runs 2-3 read the run-1 cache — the median
-    # hides that (it concealed containment_join's 13-16s true cost for
-    # rounds). Shipping the raw samples makes a flattered median
-    # visible (run1 >> run2/3) without changing the timing methodology
-    # the round-over-round comparison depends on.
+    # order. Every run starts from a cleared cache, so run 1 differs
+    # from runs 2-3 only by first-execution costs (codegen, JIT, file
+    # listing), which the raw samples keep visible next to the median.
     record["samples"] = {
         n: [round(s, 3) for s in all_samples[n]] for n in sorted(all_samples)
     }
@@ -780,8 +771,6 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from dumbo_spark.registry import QUERIES
-    from dumbo_spark.session import get_session
-    from dumbo_spark.session import release_persistent_rdds
 
     names = sorted(QUERIES) if full else [n for n in HEADLINE if n in QUERIES]
 
@@ -799,24 +788,10 @@ def main() -> None:
     # the series in the artifact next to the timings it contextualizes.
     calib_sweep: list[dict] = []
     for i, name in enumerate(names):
-        q = QUERIES[name]
-        samples = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
+        build = partial(QUERIES[name].fn, spark, sf_dir)
+        samples = [time_noop(spark, build) for _ in range(runs)]
         timings[name] = round(statistics.median(samples), 3)
         all_samples[name] = samples
-        # operators may persist() shared subplans (LSH bands, IVF cells);
-        # drop them so queries are timed in isolation and executor memory
-        # stays flat across the sweep
-        spark.catalog.clearCache()
-        # clearCache only drops CACHED PLANS — localCheckpoint blocks
-        # (the iterative CC/PageRank label tables) survive it and
-        # accumulate executor memory across the sweep (measured 4x
-        # inflation of an iterative query in a shared session vs its
-        # fresh-process time); release them explicitly
-        release_persistent_rdds(spark)
         if (i + 1) % CALIB_EVERY == 0:
             calib_sweep.append(
                 {"after_query": i + 1, "calib_spark_sec": spark_calib(spark)}
@@ -831,14 +806,12 @@ def main() -> None:
     core_runner = None
     if not full:
         try:
-            core_total, core_detail = core_suite_pass(
-                spark, QUERIES, sf_dir, release_persistent_rdds
-            )
+            core_total, core_detail = core_suite_pass(spark, QUERIES, sf_dir)
             timings["core_suite"] = core_total
             all_samples["core_suite"] = [core_total]
 
             def core_runner() -> None:
-                core_suite_pass(spark, QUERIES, sf_dir, release_persistent_rdds)
+                core_suite_pass(spark, QUERIES, sf_dir)
         except Exception as exc:  # the suite must never fail the bench
             print(f"core_suite failed: {exc!r}", file=sys.stderr)
 
@@ -854,7 +827,6 @@ def main() -> None:
             sf_dir,
             timings,
             load_close_queries(here, sf),
-            release_persistent_rdds,
             extra_runners={"core_suite": core_runner} if core_runner else None,
         )
     except Exception as exc:  # adjudication must never fail the bench

@@ -11,9 +11,11 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 import zipfile
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime SQL confs every query assumes. Applied both at session build
 # time and defensively per-catalog-load (the driver harness hands us a
@@ -132,6 +134,29 @@ def release_persistent_rdds(spark: SparkSession) -> int:
     for jrdd in jrdds:
         jrdd.unpersist()
     return len(jrdds)
+
+
+def time_noop(spark: SparkSession, build: Callable[[], DataFrame]) -> float:
+    """Seconds to run one job from input to complete result: ``build()``
+    (including any eager driver work inside it) plus a write to the
+    ``noop`` sink, which executes the whole plan and discards the rows.
+    Unlike ``count()``, the noop write cannot let Catalyst prune the
+    final steps (a left join to a unique-keyed, unreferenced right side
+    vanishes under count). Take a row count in the same pass with
+    ``df.observe(Observation(), F.count(F.lit(1)))`` inside ``build``.
+
+    Afterwards, untimed and even if the run failed, the cache is
+    cleared and every persistent RDD released, so each timed run starts
+    cold: without the reset, runs 2-3 of a median read run 1's cache
+    (it hid containment_join's O(tokens^2) cache build for a round).
+    """
+    try:
+        t0 = time.perf_counter()
+        build().write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+    finally:
+        spark.catalog.clearCache()
+        release_persistent_rdds(spark)
 
 
 def ensure_runtime_confs(spark: SparkSession) -> None:

@@ -106,11 +106,7 @@ def test_core_suite_pass_times_each_name_once(spark, sf_dir):
     # map must carry one positive timing per core name and the total
     # must be their sum
     sub = {n: QUERIES[n] for n in ("count_distinct", "compat_wordcount")}
-    from dumbo_spark.testing import release_persistent_rdds
-
-    total, detail = bench.core_suite_pass(
-        spark, sub, sf_dir, release_persistent_rdds
-    )
+    total, detail = bench.core_suite_pass(spark, sub, sf_dir)
     assert set(detail) == set(sub)
     assert all(v > 0 for v in detail.values())
     assert total == round(sum(detail.values()), 3)
@@ -119,8 +115,6 @@ def test_core_suite_pass_times_each_name_once(spark, sf_dir):
 def test_adjudicate_uses_extra_runner_for_synthetic_rows(spark, sf_dir):
     # core_suite is a synthetic timing row with no registry entry; a
     # breach on it must re-run via its own runner instead of KeyErroring
-    from dumbo_spark.testing import release_persistent_rdds
-
     calls = []
     out = bench.adjudicate(
         spark,
@@ -128,7 +122,6 @@ def test_adjudicate_uses_extra_runner_for_synthetic_rows(spark, sf_dir):
         sf_dir,
         {"core_suite": 10.0},
         {"core_suite": 0.5},
-        release_persistent_rdds,
         extra_runners={"core_suite": lambda: calls.append(1)},
     )
     assert set(out["rows"]) == {"core_suite"}
@@ -225,6 +218,43 @@ def test_release_persistent_rdds_frees_checkpoint_blocks(spark):
     assert release_persistent_rdds(spark) == 0  # idempotent
 
 
+def test_time_noop_resets_cache_and_persistent_rdds(spark):
+    # every timed run starts cold: the primitive must drop both the
+    # cached plans and the localCheckpoint blocks its build left behind
+    from pyspark import StorageLevel
+
+    from dumbo_spark.session import release_persistent_rdds, time_noop
+
+    release_persistent_rdds(spark)  # isolate from other tests' blocks
+    cached = spark.range(500).selectExpr("id", "id % 7 AS k")
+
+    def build():
+        cached.persist().count()
+        assert cached.storageLevel != StorageLevel.NONE
+        return spark.range(1000).localCheckpoint().join(cached, "id", "left_anti")
+
+    assert time_noop(spark, build) > 0
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert cached.storageLevel == StorageLevel.NONE  # cache manager empty
+
+
+def test_time_noop_observation_counts_rows_count_would_prune(spark):
+    # count() over a left join to an unreferenced, unique-keyed right
+    # side lets Catalyst drop the join; the Observation filled by the
+    # noop write sees the full plan's rows, which must equal count()
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    from dumbo_spark.session import time_noop
+
+    left = spark.range(200).selectExpr("id", "id % 10 AS k")
+    right = spark.range(10).selectExpr("id AS k").distinct()
+    df = left.join(right, "k", "left").select("id")
+    obs = Observation()
+    time_noop(spark, lambda: df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    assert obs.get["rows"] == df.count() == 200
+
+
 def test_load_close_queries_guards(tmp_path):
     # missing file / wrong sf / empty map -> None; matching sf -> map
     assert bench.load_close_queries(str(tmp_path), "0.1") is None
@@ -244,7 +274,6 @@ def test_adjudicate_flags_only_true_breaches(spark, sf_dir):
     # re-run median-of-3 in the quiet JVM and carry BOTH readings; the
     # isolated number decides window-contention vs regression-suspect.
     from dumbo_spark.registry import QUERIES
-    from dumbo_spark.testing import release_persistent_rdds
 
     name = "group_sum"
     timings = {
@@ -253,9 +282,7 @@ def test_adjudicate_flags_only_true_breaches(spark, sf_dir):
         "join_inner": 1.0, # exactly 2x close -> NOT a breach (strict >)
     }
     close = {name: 0.05, "wordcount": 0.1, "join_inner": 0.5}
-    out = bench.adjudicate(
-        spark, QUERIES, sf_dir, timings, close, release_persistent_rdds
-    )
+    out = bench.adjudicate(spark, QUERIES, sf_dir, timings, close)
     assert set(out["rows"]) == {name}
     row = out["rows"][name]
     assert row["sweep_sec"] == 10.0 and row["close_sec"] == 0.05
@@ -268,10 +295,6 @@ def test_adjudicate_flags_only_true_breaches(spark, sf_dir):
 
 def test_adjudicate_without_baseline_is_a_noop(spark, sf_dir):
     from dumbo_spark.registry import QUERIES
-    from dumbo_spark.testing import release_persistent_rdds
 
-    out = bench.adjudicate(
-        spark, QUERIES, sf_dir, {"group_sum": 99.0}, None,
-        release_persistent_rdds,
-    )
+    out = bench.adjudicate(spark, QUERIES, sf_dir, {"group_sum": 99.0}, None)
     assert out["rows"] == {} and "baseline" in out

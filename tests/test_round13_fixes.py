@@ -54,14 +54,15 @@ def test_checkpoint_helpers_shared_not_duplicated():
 
 
 def test_release_persistent_rdds_is_a_runtime_utility():
-    """bench.py imports release_persistent_rdds from session.py so a
-    bench-only environment without duckdb/pandas can run; testing.py
-    re-exports the same object for existing callers."""
+    """bench.py imports its timing primitive (which releases persistent
+    RDDs) from session.py so a bench-only environment without
+    duckdb/pandas can run; testing.py re-exports release_persistent_rdds
+    for existing callers."""
     from dumbo_spark import session, testing
 
     assert testing.release_persistent_rdds is session.release_persistent_rdds
     bench_src = open("bench.py").read()
-    assert "from dumbo_spark.session import release_persistent_rdds" in bench_src
+    assert "from dumbo_spark.session import get_session, time_noop" in bench_src
     assert "from dumbo_spark.testing import" not in bench_src
 
 

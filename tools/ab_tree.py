@@ -9,11 +9,11 @@ host (same-code driver runs differ per-query by up to 5.4x).
     python tools/ab_tree.py <old_tree> <query> [rounds=5]
 
 Each round runs old then new, one fresh process each; a process builds
-the standard session (SPARK_GRAFT_CPUS), warms the JVM, and times the
-query median-of-3 with the noop sink, clearing caches and persistent
-RDDs between runs (true per-run cold cost — the adjudication
-discipline, not the sweep's). Prints a per-round table plus medians
-and a verdict.
+the standard session (SPARK_GRAFT_CPUS, default the core count), warms
+the JVM, and times the query median-of-3 with the noop sink, clearing
+caches and persistent RDDs after every run (true per-run cold cost,
+the rule session.time_noop applies everywhere else). Prints a
+per-round table plus medians and a verdict.
 """
 
 from __future__ import annotations
@@ -31,10 +31,11 @@ sys.path.insert(0, tree)
 from dumbo_spark.registry import QUERIES
 from dumbo_spark.session import get_session, release_persistent_rdds
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 spark = get_session("ab_tree", cpus=cpus)
 spark.range(1_000_000).selectExpr("sum(id)").collect()
 samples = []
+# inline, not session.time_noop: the old tree may predate that function
 for _ in range(3):
     t0 = time.perf_counter()
     QUERIES[name].fn(spark, sf_dir).write.format("noop").mode(
@@ -57,8 +58,13 @@ def run_one(tree: str, name: str) -> dict:
         env=env,
         timeout=900,
     )
-    line = out.stdout.strip().splitlines()[-1]
-    return json.loads(line)
+    lines = out.stdout.strip().splitlines()
+    if out.returncode != 0 or not lines:
+        raise RuntimeError(
+            f"child for {name} in {tree} failed: exit {out.returncode}, "
+            f"{len(lines)} stdout lines; stderr:\n{out.stderr[-2000:]}"
+        )
+    return json.loads(lines[-1])
 
 
 def main() -> None:

@@ -1,9 +1,15 @@
 """Scale-class pin for the top-expensive iterative bench family
 (VERDICT r12 Next #4): run pagerank_checked, copurchase_components and
-dup_cluster_sizes on 1x / 10x / 30x replicas of sf0.1 and record, per
-run, wall-clock AND the per-stage shuffle-write series — the r12
-shuffle diet changed the constants, so the scale class needs re-pinning
-with shuffle bytes, not just seconds.
+dup_cluster_sizes (plus the ANN_QUERIES family) on 1x / 10x / 30x
+replicas of sf0.1 and record, per run, wall-clock AND the per-stage
+shuffle-write series — the r12 shuffle diet changed the constants, so
+the scale class needs re-pinning with shuffle bytes, not just seconds.
+
+Each run is timed by ``session.time_noop``: build plus the full
+noop-sink materialization, never ``count()``, which lets Catalyst prune
+a final left join to a unique-keyed, unreferenced right side
+(dedup_substring_trim). The row count comes from an ``Observation`` on
+the same pass, so each query runs once per replica.
 
 Stage metrics come from the Spark UI's REST API (the stable public
 surface; AppStatusStore's scala-default-arg signatures aren't callable
@@ -15,6 +21,11 @@ shuffle-producing stage after the r12 one-shuffle-per-round diet).
 
     python tools/scale_class.py                  # full 1x/10x/30x sweep
     SCALE_CLASS_REPLS=1,10 python tools/scale_class.py
+    python tools/scale_class.py dedup_substring_trim knn_cosine_lsh
+
+Positional names replace the default roster; a name in ANN_QUERIES runs
+on the embeddings replicas, any other name on the table replicas.
+
 Prints a markdown table ready for SCALE.md and writes
 /tmp/scale_class_report.md.
 """
@@ -78,37 +89,25 @@ def _completed_stages(spark) -> list[dict]:
         return json.load(r)
 
 
-def run_one(spark, name: str, sf_dir: str, noop: bool = False) -> dict:
-    """Time one query and attribute its completed stages.
+def run_one(spark, name: str, sf_dir: str) -> dict:
+    """Time one query and attribute its completed stages."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
 
-    ``noop=False`` (default, the historical method): time ``.count()``.
-    Fine for the iterative/ANN roster, whose work is aggregations and
-    checkpointed loops that a count cannot prune. ``noop=True``
-    (SCALE_CLASS_NOOP=1): time the full-materialization noop write —
-    REQUIRED for queries whose final step Catalyst can eliminate under
-    count() (measured: dedup_substring_trim's count() pruned the whole
-    trim to a 3-stage 0-shuffle token count, because count over a left
-    join with a unique-keyed, unreferenced right side drops the join).
-    Rows are then counted untimed afterwards."""
     from dumbo_spark.registry import QUERIES
-    from dumbo_spark.session import release_persistent_rdds
+    from dumbo_spark.session import time_noop
 
+    obs = Observation()
     before = {s["stageId"] for s in _completed_stages(spark)}
-    df = QUERIES[name].fn(spark, sf_dir)
-    t0 = time.perf_counter()
-    if noop:
-        df.write.format("noop").mode("overwrite").save()
-    else:
-        rows = df.count()
-    wall = time.perf_counter() - t0
-    # stage attribution snapshot happens HERE, before any untimed
-    # follow-up count, so the noop path's metrics cover exactly the
-    # timed materialization
+    wall = time_noop(
+        spark,
+        lambda: QUERIES[name].fn(spark, sf_dir).observe(
+            obs, F.count(F.lit(1)).alias("rows")
+        ),
+    )
     stages = [
         s for s in _completed_stages(spark) if s["stageId"] not in before
     ]
-    if noop:
-        rows = df.count()  # untimed, excluded from the stage window
     stages.sort(key=lambda s: s["stageId"])
     # 3-decimal MB: the ANN family's per-stage shuffles are KB-scale
     # (5k embeddings x 64 floats), and 1-decimal rounding read 0.0
@@ -118,10 +117,8 @@ def run_one(spark, name: str, sf_dir: str, noop: bool = False) -> dict:
         for s in stages
         if s["shuffleWriteBytes"] > 0
     ]
-    spark.catalog.clearCache()
-    release_persistent_rdds(spark)
     return {
-        "rows": rows,
+        "rows": obs.get["rows"],
         "sec": round(wall, 1),
         "n_stages": len(stages),
         "shuffle_write_mb_total": round(
@@ -141,37 +138,26 @@ def main() -> None:
     spark = get_session(
         "scale_class", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 16))
     )
-    only_ann = os.environ.get("SCALE_CLASS_ONLY_ANN", "") == "1"
-    iter_q = [] if only_ann else QUERIES_UNDER_TEST
-    # SCALE_CLASS_QUERIES=a,b,c overrides the iterative set (still runs
-    # on the full-table replicas); combine with SCALE_CLASS_SKIP_ANN=1
-    # to pin a single new operator's scale class without re-timing the
-    # whole roster.
-    override = os.environ.get("SCALE_CLASS_QUERIES", "")
-    if override:
-        iter_q = [n.strip() for n in override.split(",") if n.strip()]
-    ann_q = [] if os.environ.get("SCALE_CLASS_SKIP_ANN", "") == "1" else ANN_QUERIES
+    names = sys.argv[1:] or QUERIES_UNDER_TEST + ANN_QUERIES
+    iter_q = [n for n in names if n not in ANN_QUERIES]
+    ann_q = [n for n in names if n in ANN_QUERIES]
     results: dict[str, dict[int, dict]] = {
         q: {} for q in iter_q + ann_q
     }
     for repl in repls:
         if repl == 1:
             sf_dir = BASE_SF
-        elif iter_q:  # the full-table replicas feed only the iterative set
+        elif iter_q:  # the full-table replicas feed only the non-ANN names
             sf_dir = f"/tmp/dumbo_spark_scale_x{repl}"
             t0 = time.perf_counter()
             build(spark, repl=repl, out=sf_dir)
             print(f"# build x{repl}: {time.perf_counter()-t0:.1f}s", flush=True)
-        noop = os.environ.get("SCALE_CLASS_NOOP", "") == "1"
         for name in iter_q:
-            rec = run_one(spark, name, sf_dir, noop=noop)
+            rec = run_one(spark, name, sf_dir)
             results[name][repl] = rec
             print(f"# x{repl} {name}: {json.dumps(rec)}", flush=True)
-        if not ann_q:
-            ann_dir = None
-        elif repl == 1:
-            ann_dir = BASE_SF
-        else:
+        ann_dir = BASE_SF
+        if ann_q and repl != 1:
             ann_dir = f"/tmp/dumbo_spark_scale_ann_x{repl}"
             t0 = time.perf_counter()
             build_ann(spark, repl=repl, out=ann_dir)

@@ -6,15 +6,10 @@ global key) before anyone pays for a real cluster run.
 
     python tools/scale_smoke.py            # prints a timing table
 
-MEASUREMENT CAVEAT (r14): the smoke drives each query with ``.count()``
-because its PRIMARY signal is the row count (cross-sweep row drift =
-semantics change). Row counts are always exact, but the WALL-CLOCK is
-the count-path time, and for a query whose final step is a left join
-with a unique-keyed, otherwise-unreferenced right side, Catalyst
-eliminates that join under count() — the timing then under-reports the
-full materialization (measured: dedup_substring_trim count-pruned to a
-3-stage token count). Full-materialization scale timings live in
-SCALE.md's scale-class tables (tools/scale_class.py SCALE_CLASS_NOOP=1).
+Each query runs once, timed by ``session.time_noop`` (build plus the
+full noop-sink materialization); its row count, the smoke's primary
+signal (cross-sweep row drift = semantics change), comes from an
+``Observation`` on the same pass.
 """
 
 from __future__ import annotations
@@ -65,8 +60,11 @@ def build(spark, repl: int | None = None, out: str | None = None) -> None:
 
 
 def main() -> None:
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from dumbo_spark.registry import QUERIES
-    from dumbo_spark.session import get_session
+    from dumbo_spark.session import get_session, time_noop
 
     spark = get_session("scale_smoke", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", 16)))
     t0 = time.perf_counter()
@@ -309,19 +307,15 @@ def main() -> None:
         names = [n for n in names if n in wanted]
     print(f"| query | sf0.1 ×{REPL} sec | rows |")
     print("|---|---|---|")
-    from dumbo_spark.session import release_persistent_rdds
-
     for name in names:
-        q = QUERIES[name]
-        t0 = time.perf_counter()
-        n = q.fn(spark, OUT).count()
-        dt = time.perf_counter() - t0
-        print(f"| {name} | {dt:.2f} | {n} |")
-        # isolate queries: leaked checkpoint blocks from iterative
-        # operators otherwise inflate everything after them (the 464s
-        # ghost, SCALE.md round-12 continuation)
-        spark.catalog.clearCache()
-        release_persistent_rdds(spark)
+        obs = Observation()
+        dt = time_noop(
+            spark,
+            lambda: QUERIES[name].fn(spark, OUT).observe(
+                obs, F.count(F.lit(1)).alias("rows")
+            ),
+        )
+        print(f"| {name} | {dt:.2f} | {obs.get['rows']} |")
     spark.stop()
 
 
