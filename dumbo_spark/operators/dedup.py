@@ -27,15 +27,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from dumbo_spark.functions.text import ngrams, tokens
-from dumbo_spark.operators._checkpoint import (  # shared with graph.py
-    _claim_run_dir,
-    _release_local_checkpoint,
-)
+from dumbo_spark.operators._checkpoint import Staging  # shared with graph.py
 
 #: MinHash parameters: k = bands × rows signature components.
 MINHASH_K = 32
 LSH_BANDS = 8
 LSH_ROWS = 4  # MINHASH_K / LSH_BANDS
+
+#: Rounds fused into one plan per staging job in connected_components
+#: and pagerank (r15). Per-round driver actions are pure overhead (a
+#: scheduling barrier at every scale), so two rounds per job halves
+#: them; each round's arithmetic is unchanged (the intermediate round is
+#: a lazy subtree evaluated once inside the same job), at the cost of at
+#: most one identity round of work past CC's fixpoint. In-JVM
+#: interleaved A/B at sf0.1: 2 beats 1 (dedup_canonical 4.80→4.31 s,
+#: copurchase_components 6.26→5.30 s medians); 3 measured equal to 2;
+#: pagerank_checked neutral (6.16 vs 6.14 s).
+ROUNDS_PER_JOB = 2
 
 
 def dedup_exact(documents: DataFrame) -> DataFrame:
@@ -185,7 +193,6 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
     durable_dir: str | None = None,
-    chain: int = 2,
 ) -> DataFrame:
     """Connected components by iterative min-label propagation.
 
@@ -210,196 +217,110 @@ def connected_components(
     Scale notes: the join shuffles on node id each round, and per-round
     lineage truncation keeps plan size constant. This is the standard
     large-graph CC shape (GraphFrames does the same with
-    large-star/small-star refinements).
+    large-star/small-star refinements). Rounds run
+    :data:`ROUNDS_PER_JOB` to a job.
 
-    ``chain`` (r15): propagation rounds fused into one plan per
-    materialize+count job. Per-round driver actions are pure overhead
-    (a scheduling barrier at every scale), so chaining two rounds per
-    job halves them; the label arithmetic is round-by-round identical
-    and convergence detection is exact either way (prev is the label
-    entering the LAST chained round, so changed == 0 still means the
-    fixpoint was reached) at the cost of at most ``chain - 1`` identity
-    rounds of extra work past the fixpoint. In-JVM interleaved A/B at
-    sf0.1: chain=2 beats 1 (dedup_canonical 4.80→4.31 s,
-    copurchase_components 6.26→5.30 s medians); chain=3 measured equal
-    to 2, so 2 is the default.
-
-    Durability contract: with ``durable_dir=None`` truncation uses
-    ``localCheckpoint()`` — executor-memory blocks, fast, but an
-    executor loss mid-run kills the job (acceptable in local mode /
-    tests). On a real cluster pass ``durable_dir`` (HDFS/S3 path): each
-    round's labels are round-tripped through parquet (alternating
-    subpaths, exactly dumbo's Job.additer temp-path discipline), so the
-    run survives executor loss and restarts from the last round's
-    files. The label table is one row per edge-touched node — tiny next
-    to the corpus — so the per-round write is cheap.
-
-    Each invocation claims its own ``run-N`` subdirectory under
-    ``durable_dir``, and the final labels are materialized to a
-    ``labels_final`` path before returning — so two runs sharing a
-    durable_dir never collide, and the returned DataFrame is backed by
-    files no later round (or later run) overwrites.
+    Staging, lifetime and durability follow the contract in
+    ``operators/_checkpoint.py``. ``durable_dir`` (a local path) makes
+    the run restartable from parquet under its own ``run-N``
+    subdirectory: ``edges``, ``adj``, ``labels_{0,1}``, and the returned
+    labels at ``labels_final``.
 
     edges: (doc_a, doc_b) undirected. Returns (doc_id, cluster_id)
     where cluster_id = min doc_id of the component.
     """
-    if chain < 1:
-        raise ValueError(f"chain must be >= 1, got {chain}")
-    if durable_dir is not None:
-        run_dir = _claim_run_dir(durable_dir)
-
-    def truncate(df: DataFrame, rnd: int) -> DataFrame:
-        if durable_dir is None:
-            # LAZY checkpoint: the convergence count below is a FULL
-            # count (no limit) and is the first action over the frame,
-            # so it materializes every partition of the checkpoint in
-            # the same job — one job per round instead of the old
-            # eager-checkpoint job + count job (guide §1.2: per-round
-            # driver actions are pure overhead at every scale).
-            return df.localCheckpoint(eager=False)
-        path = f"{run_dir}/labels_{rnd % 2}"
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-
-    # TRUNCATE the edge lineage, don't just persist it: with persist the
-    # (possibly enormous — e.g. a PPJoin) edge-construction subplan stays
-    # embedded in every round's logical plan and Catalyst re-optimizes it
-    # per iteration — measured 281s → 75s for dup_cluster_sizes at 10×
-    # (the same finding as the triangle census, SCALE.md). The INPUT list
-    # is checkpointed (half the symmetric table) so the construction runs
-    # exactly once; the adjacency below is derived from the cached scan.
-    # Durable runs round-trip through the run dir so the restart contract
-    # holds for the input too, not just the labels.
-    if durable_dir is None:
-        # lazy: materialized by the adjacency persist-count below in the
-        # same job chain (no standalone checkpoint job)
-        e0 = edges.select("doc_a", "doc_b").localCheckpoint(eager=False)
-    else:
-        edges_path = f"{run_dir}/edges"
-        edges.select("doc_a", "doc_b").write.mode("overwrite").parquet(edges_path)
-        e0 = edges.sparkSession.read.parquet(edges_path)
-    # explode(array(ab, ba)) symmetrization: one scan of the e0
-    # checkpoint instead of one per union branch (r15; the adjacency
-    # below still repartition+persists exactly as before)
-    both = e0.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-                F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
-    nodes = both.select(F.col("src").alias("node")).distinct()
-    # Self-loop trick: append (v, v) for every node, so the self row
-    # delivers the node's OWN current label into its min-aggregation
-    # group, folding the old `least(own, neighbor_min)` left-join into
-    # the same shuffle — and carries the PREVIOUS label out of the agg,
-    # making convergence detection a cached-scan predicate instead of a
-    # join of consecutive label tables. The loop-invariant adjacency is
-    # hash-partitioned by the lookup key ONCE and persist()ed, NOT
-    # localCheckpoint()ed: in this Spark version the checkpoint's
-    # LogicalRDD reports UnknownPartitioning under AQE (the per-round
-    # join re-shuffled the edge side every iteration), while the cached
-    # plan keeps its REPARTITION_BY_NUM partitioning (AQE leaves cached
-    # plan output partitioning alone by default) — A/B at sf0.1, 50-
-    # round capable loop: persist 5.7s vs checkpoint 7.9s median. The
-    # lineage above `adj` is already flat (two selects over the e0
-    # checkpoint), so persist here cannot re-trigger the per-round
-    # plan-growth problem that forced checkpointing the LABELS.
-    adj = both.unionByName(
-        nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-    )
-    n_shuffle = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if durable_dir is None:
-        adj = adj.repartition(n_shuffle, "dst").persist()
-        adj.count()
-    else:
-        adj_path = f"{run_dir}/adj"
-        adj.write.mode("overwrite").parquet(adj_path)
-        adj = adj.sparkSession.read.parquet(adj_path)
-    labels = None  # None ⇒ implicit identity labeling (round 1 inlined)
-    converged = False
-
-    def one_round(prev_labels):
-        """One min-label propagation round as a LAZY frame (no action).
-
-        prev_labels None ⇒ round 1 inlined: with identity labels the
-        label join is the identity (each dst delivers its own id as
-        its label), so min-over-neighbors is min(dst) directly and
-        prev — the self-loop's delivered label — is src. Saves the
-        initial label checkpoint AND the first round's join;
-        arithmetic and convergence semantics are identical.
-        """
-        if prev_labels is None:
-            joined = adj.select("src", "dst", F.col("dst").alias("label"))
-        else:
-            joined = adj.join(prev_labels, adj.dst == prev_labels.node)
-        return (
-            joined
-            .groupBy("src")
-            .agg(
-                F.min("label").alias("label"),
-                F.min(
-                    F.when(F.col("dst") == F.col("src"), F.col("label"))
-                ).alias("prev"),
-            )
-            .select(F.col("src").alias("node"), "label", "prev")
+    with Staging(durable_dir) as st:
+        # TRUNCATE the edge lineage, don't just persist it: with persist
+        # the (possibly enormous — e.g. a PPJoin) edge-construction
+        # subplan stays embedded in every round's logical plan and
+        # Catalyst re-optimizes it per iteration — measured 281s → 75s
+        # for dup_cluster_sizes at 10× (the same finding as the triangle
+        # census, SCALE.md). The INPUT list is staged (half the
+        # symmetric table) so the construction runs exactly once; lazy,
+        # it is materialized by the adjacency's staging job below.
+        e0 = st.stage(edges.select("doc_a", "doc_b"), "edges")
+        # explode(array(ab, ba)) symmetrization: one scan of the e0
+        # checkpoint instead of one per union branch (r15)
+        both = e0.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                    F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+                )
+            ).alias("_e")
+        ).select("_e.src", "_e.dst")
+        nodes = both.select(F.col("src").alias("node")).distinct()
+        # Self-loop trick: append (v, v) for every node, so the self row
+        # delivers the node's OWN current label into its min-aggregation
+        # group, folding the old `least(own, neighbor_min)` left-join
+        # into the same shuffle — and carries the PREVIOUS label out of
+        # the agg, making convergence detection a cached-scan predicate
+        # instead of a join of consecutive label tables. The
+        # loop-invariant adjacency is hash-partitioned by the lookup key
+        # ONCE (A/B at sf0.1, 50-round capable loop: persist 5.7s vs
+        # checkpoint 7.9s median). Its lineage is already flat (two
+        # selects over the e0 checkpoint), so persisting it cannot
+        # re-trigger the per-round plan growth that forced staging the
+        # LABELS.
+        adj = st.stage_partitioned(
+            both.unionByName(
+                nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
+            ),
+            "adj",
+            "dst",
         )
 
-    rounds_done = 0
-    chunk = 0
-    while rounds_done < max_iter:
-        # Chain `chain` propagation rounds into ONE plan before the
-        # checkpoint+count action (r15: per-round driver jobs are pure
-        # overhead — two rounds per job halves them; the intermediate
-        # round is a lazy subtree evaluated once inside the same job).
-        # Convergence stays exact: prev is the label entering the LAST
-        # chained round, so changed == 0 ⟺ that round was the identity
-        # ⟺ the fixpoint was already reached — identical detection
-        # semantics, at most `chain - 1` extra (identity) rounds of
-        # work past the fixpoint. The raise-on-nonconvergence valve is
-        # unchanged: exactly max_iter propagation rounds are applied
-        # before giving up.
-        step = min(chain, max_iter - rounds_done)
-        frame = labels
-        for _ in range(step):
-            frame = one_round(frame)
-        new_labels = truncate(frame, rnd=chunk)
-        rounds_done += step
-        chunk += 1
-        # FULL count (not limit(1)): touches every partition, so the
-        # lazy checkpoint above is completely materialized by this one
-        # job and lineage truncation still holds round to round
-        changed = new_labels.where(F.col("label") != F.col("prev")).count()
-        if labels is not None and durable_dir is None:
-            # new_labels is materialized and convergence read from it —
-            # the previous round's checkpoint has no consumer left
-            _release_local_checkpoint(labels)
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if durable_dir is None:
-        # the final labels are checkpointed — the adjacency cache and
-        # the input-edge checkpoint have no remaining consumer, so
-        # release the executor memory eagerly
-        adj.unpersist()
-        _release_local_checkpoint(e0)
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter="
-            f"{max_iter} rounds (a component's diameter exceeds it); "
-            "raise max_iter rather than consuming split components"
+        def one_round(prev_labels):
+            """One min-label propagation round as a LAZY frame (no action).
+
+            prev_labels None ⇒ round 1 inlined: with identity labels the
+            label join is the identity (each dst delivers its own id as
+            its label), so min-over-neighbors is min(dst) directly and
+            prev — the self-loop's delivered label — is src. Saves the
+            initial label checkpoint AND the first round's join;
+            arithmetic and convergence semantics are identical.
+            """
+            if prev_labels is None:
+                joined = adj.select("src", "dst", F.col("dst").alias("label"))
+            else:
+                joined = adj.join(prev_labels, adj.dst == prev_labels.node)
+            return (
+                joined
+                .groupBy("src")
+                .agg(
+                    F.min("label").alias("label"),
+                    F.min(
+                        F.when(F.col("dst") == F.col("src"), F.col("label"))
+                    ).alias("prev"),
+                )
+                .select(F.col("src").alias("node"), "label", "prev")
+            )
+
+        # Convergence stays exact with fused rounds: prev is the label
+        # entering the LAST round of the job, so changed == 0 ⟺ that
+        # round was the identity ⟺ the fixpoint was already reached. The
+        # probe is a FULL count (not limit(1)): it touches every
+        # partition, so the lazy label checkpoint is completely
+        # materialized by this one job.
+        labels, converged = st.iterate(
+            one_round,
+            None,
+            max_iter=max_iter,
+            rounds_per_job=ROUNDS_PER_JOB,
+            name="labels",
+            probe=lambda new: new.where(F.col("label") != F.col("prev")).count() == 0,
         )
-    out = labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
-    if durable_dir is not None:
-        # stable final materialization: the alternating labels_{0,1}
-        # paths are scratch; the returned (lazy) DataFrame must not be
-        # backed by a path a subsequent round/run would overwrite.
-        final = f"{run_dir}/labels_final"
-        out.write.mode("overwrite").parquet(final)
-        out = labels.sparkSession.read.parquet(final)
-    return out
+        if not converged:
+            raise RuntimeError(
+                f"connected_components did not converge within max_iter="
+                f"{max_iter} rounds (a component's diameter exceeds it); "
+                "raise max_iter rather than consuming split components"
+            )
+        return st.result(
+            labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")),
+            labels,
+            name="labels_final",
+        )
 
 
 def dedup_clusters(documents: DataFrame) -> DataFrame:
@@ -971,7 +892,6 @@ def pagerank(
     max_iter: int = 10,
     damping: float = 0.85,
     durable_dir: str | None = None,
-    chain: int = 2,
 ) -> DataFrame:
     """PageRank over an undirected edge list — the numeric-iterative
     complement of :func:`connected_components` (dumbo's repeated
@@ -980,190 +900,116 @@ def pagerank(
 
     Per iteration: each node sends rank/degree along its edges, ranks
     re-form as (1-d)/N + d·Σ incoming — one join + one partial-agg
-    shuffle, lineage truncated per round (same durability contract as
-    connected_components: ``durable_dir`` for cluster runs).
-    Undirected edges mean no dangling mass. Returns (doc_id, rank)
-    with Σ rank = 1 up to float error.
-
-    ``chain`` (r15): iterations fused into one plan per checkpoint job
-    (same mechanism and rationale as connected_components' ``chain``;
-    the per-round IEEE arithmetic is unchanged — the intermediate
-    round is a lazy subtree of the same plan, evaluated once).
-    Measured neutral at sf0.1 (pagerank_checked 6.16 vs 6.14 s) but
-    halves the driver's scheduling barriers, which is the posture you
-    want on a cluster; default 2.
+    shuffle, lineage truncated per round, :data:`ROUNDS_PER_JOB` rounds
+    to a job (the per-round IEEE arithmetic is unchanged). Runs exactly
+    ``max_iter`` rounds. Undirected edges mean no dangling mass.
+    Returns (doc_id, rank) with Σ rank = 1 up to float error.
 
     edges: (doc_a, doc_b) pairs.
 
-    ``durable_dir`` must be a LOCAL filesystem path: the run claims a
-    private ``run-N`` subtree via an O_EXCL mkdir (same no-collision
-    contract as :func:`connected_components`), so URI schemes
-    (``hdfs://``, ``s3a://``) raise ValueError since r13 — previously
-    they ran with a documented collision risk. Cluster runs wanting
-    shared storage should point durable_dir at a job-unique local
-    staging path or pre-create per-run URIs themselves.
+    Staging, lifetime and durability follow the contract in
+    ``operators/_checkpoint.py``. ``durable_dir`` must be a LOCAL
+    filesystem path (URI schemes raise ValueError since r13); the run
+    writes ``pr_edges``, ``pr_deg``, ``pr_adj`` and ``ranks_{0,1}``
+    under its own ``run-N`` subdirectory.
     """
-    # Claim a private run-N subtree up front (same no-collision
-    # contract as connected_components, ADVICE r12): two pagerank runs
-    # sharing a durable_dir previously overwrote each other's
-    # pr_edges/pr_deg/pr_adj/ranks files under lazy evaluation.
-    if chain < 1:
-        raise ValueError(f"chain must be >= 1, got {chain}")
-    run_dir = None if durable_dir is None else _claim_run_dir(durable_dir)
-
-    def truncate(df: DataFrame, rnd: int) -> DataFrame:
-        if run_dir is None:
-            return df.localCheckpoint()
-        path = f"{run_dir}/ranks_{rnd % 2}"
-        df.write.mode("overwrite").parquet(path)
-        return df.sparkSession.read.parquet(path)
-
-    # TRUNCATE the edge/degree lineage, don't persist it: with persist
-    # the (possibly enormous — e.g. a PPJoin) edge-construction subplan
-    # stays embedded in every iteration's logical plan and Catalyst
-    # re-optimizes it per round — the same plan-string blowup CC fixed
-    # in round 4 (measured here: pagerank_checked on the 10× replica
-    # 287s → 45s, SCALE.md round-5 table).
-    # symmetrize via explode(array(ab, ba)) — same row multiset as the
-    # old two-branch unionByName, but the (possibly enormous) edge
-    # subtree is evaluated ONCE when the checkpoint below materializes,
-    # not once per union branch (r15 optimization, guide §2.4)
-    both = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-                F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
-    if run_dir is None:
-        # lazy: materialized (through the groupBy shuffle, which runs
-        # once) by the deg count below — one setup job instead of three
-        both = both.localCheckpoint(eager=False)
-    else:
-        edges_path = f"{run_dir}/pr_edges"
-        both.write.mode("overwrite").parquet(edges_path)
-        both = both.sparkSession.read.parquet(edges_path)
-    deg = both.groupBy("src").agg(F.count("*").alias("deg"))
-    # deg must honor the same durability contract as the ranks: a
-    # localCheckpoint'd deg dies with an executor and has no recompute
-    # path, failing every remaining iteration on a cluster run
-    if run_dir is None:
-        deg = deg.localCheckpoint(eager=False)
-    else:
-        deg_path = f"{run_dir}/pr_deg"
-        deg.write.mode("overwrite").parquet(deg_path)
-        deg = deg.sparkSession.read.parquet(deg_path)
-    n_nodes = deg.count()
-    if n_nodes == 0:
-        # EDGELESS graph (a corpus with zero verified near-dup pairs):
-        # the uniform init 1/N is undefined, and every downstream
-        # consumer wants "no central documents" — return an empty
-        # (doc_id, rank) frame instead of a ZeroDivisionError (r11
-        # robustness pass; reachable through doc_pagerank /
-        # pagerank_checked whenever the threshold prunes every pair).
-        # doc_id keeps the CALLER's id type — pagerank is generic over
-        # it, and a hardcoded long would diverge from the non-empty
-        # path for string/int ids (r11 review finding)
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [
-                T.StructField("doc_id", edges.schema["doc_a"].dataType),
-                T.StructField("rank", T.DoubleType()),
-            ]
+    with Staging(durable_dir) as st:
+        # TRUNCATE the edge/degree lineage, don't persist it: with
+        # persist the (possibly enormous — e.g. a PPJoin)
+        # edge-construction subplan stays embedded in every iteration's
+        # logical plan and Catalyst re-optimizes it per round — the same
+        # plan-string blowup CC fixed in round 4 (measured here:
+        # pagerank_checked on the 10× replica 287s → 45s, SCALE.md
+        # round-5 table). Symmetrize via explode(array(ab, ba)) — the
+        # edge subtree is evaluated ONCE, not once per union branch (r15,
+        # guide §2.4). Both stages are lazy: the deg count below
+        # materializes them (through the groupBy shuffle, which runs
+        # once) — one setup job instead of three.
+        both = st.stage(
+            edges.select(
+                F.explode(
+                    F.array(
+                        F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                        F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+                    )
+                ).alias("_e")
+            ).select("_e.src", "_e.dst"),
+            "pr_edges",
         )
-        return edges.sparkSession.createDataFrame([], schema)
-    base = (1.0 - damping) / n_nodes
-    # The (src, dst, deg) adjacency is loop-invariant: join it ONCE,
-    # hash-partition by the rank-lookup key, and persist — the cached
-    # plan keeps its REPARTITION_BY_NUM partitioning (a localCheckpoint
-    # would report UnknownPartitioning under AQE and re-shuffle the edge
-    # side every round; same A/B as connected_components). Before this
-    # hoist every round re-ran both⋈deg and re-shuffled the edge table.
-    # Lineage above adj is flat (scans of the both/deg checkpoints), so
-    # persist cannot re-trigger the per-round plan-growth problem.
-    adj = both.join(deg, "src").select("src", "dst", "deg")
-    n_shuffle = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if run_dir is None:
-        adj = adj.repartition(n_shuffle, "src").persist()
-        adj.count()
-    else:
-        adj_path = f"{run_dir}/pr_adj"
-        adj.write.mode("overwrite").parquet(adj_path)
-        adj = adj.sparkSession.read.parquet(adj_path)
-    ranks = None  # None ⇒ implicit uniform 1/N ranks (round 1 inlined)
+        deg = st.stage(both.groupBy("src").agg(F.count("*").alias("deg")), "pr_deg")
+        n_nodes = deg.count()
+        if n_nodes == 0:
+            # EDGELESS graph (a corpus with zero verified near-dup
+            # pairs): the uniform init 1/N is undefined, and every
+            # downstream consumer wants "no central documents" — return
+            # an empty (doc_id, rank) frame instead of a
+            # ZeroDivisionError (r11; reachable through doc_pagerank /
+            # pagerank_checked whenever the threshold prunes every
+            # pair). doc_id keeps the CALLER's id type — pagerank is
+            # generic over it (r11 review finding)
+            from pyspark.sql import types as T
 
-    def one_iter(prev_ranks):
-        """One power-iteration round as a LAZY frame (no action).
-
-        Every node of the symmetric edge list has in-edges, so the
-        inflow agg's key set IS the node set — the old left-join back
-        to the previous ranks (and its coalesce(inflow, 0.0)) was a
-        per-round shuffle that could never fire its null arm. The
-        contribution stays rank/deg (NOT rank·(1/deg)): the recursive-
-        CTE oracles replay that exact IEEE division edge-by-edge.
-
-        prev_ranks None ⇒ round 1 inlined: every rank is the SAME
-        literal 1/N, so the rank join is the identity — contribute
-        lit(1/N)/deg straight off the adjacency. Same IEEE division
-        (the literal is the identical double the init frame carried);
-        saves the init-rank checkpoint and the first join round.
-        """
-        if prev_ranks is None:
-            contrib = adj.select(
-                "dst", (F.lit(1.0 / n_nodes) / F.col("deg")).alias("c")
+            schema = T.StructType(
+                [
+                    T.StructField("doc_id", edges.schema["doc_a"].dataType),
+                    T.StructField("rank", T.DoubleType()),
+                ]
             )
-        else:
-            contrib = adj.join(prev_ranks, adj.src == prev_ranks.node).select(
-                "dst", (F.col("rank") / F.col("deg")).alias("c")
-            )
-        return (
-            contrib
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inflow"))
-            .select(
-                F.col("dst").alias("node"),
-                (F.lit(base) + F.lit(damping) * F.col("inflow")).alias("rank"),
-            )
+            return edges.sparkSession.createDataFrame([], schema)
+        base = (1.0 - damping) / n_nodes
+        # The (src, dst, deg) adjacency is loop-invariant: join it ONCE
+        # and stage it hash-partitioned by the rank-lookup key. Before
+        # this hoist every round re-ran both⋈deg and re-shuffled the
+        # edge table. Lineage above adj is flat (scans of the both/deg
+        # stages), so persist cannot re-trigger per-round plan growth.
+        adj = st.stage_partitioned(
+            both.join(deg, "src").select("src", "dst", "deg"), "pr_adj", "src"
         )
 
-    # Chain `chain` power-iteration rounds into ONE plan before the
-    # eager per-chunk checkpoint (r15: the checkpoint is the only
-    # per-round action — two rounds per job halves driver round-trips;
-    # the intermediate round is a lazy subtree evaluated exactly once
-    # inside the same job, and the arithmetic is the identical
-    # IEEE sequence round by round).
-    rounds_done = 0
-    chunk = 0
-    while rounds_done < max_iter:
-        step = min(chain, max_iter - rounds_done)
-        frame = ranks
-        for _ in range(step):
-            frame = one_iter(frame)
-        new_ranks = truncate(frame, rnd=chunk)
-        rounds_done += step
-        chunk += 1
-        if ranks is not None and run_dir is None:
-            _release_local_checkpoint(ranks)  # stale round, no consumer
-        ranks = new_ranks
-    if ranks is None:
-        # max_iter == 0: the uniform initialization (kept lazy over the
-        # still-live deg checkpoint — nothing to truncate)
-        ranks = deg.select(
-            F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("rank")
+        def one_iter(prev_ranks):
+            """One power-iteration round as a LAZY frame (no action).
+
+            Every node of the symmetric edge list has in-edges, so the
+            inflow agg's key set IS the node set — the old left-join back
+            to the previous ranks (and its coalesce(inflow, 0.0)) was a
+            per-round shuffle that could never fire its null arm. The
+            contribution stays rank/deg (NOT rank·(1/deg)): the recursive-
+            CTE oracles replay that exact IEEE division edge-by-edge.
+
+            prev_ranks None ⇒ round 1 inlined: every rank is the SAME
+            literal 1/N, so the rank join is the identity — contribute
+            lit(1/N)/deg straight off the adjacency. Same IEEE division
+            (the literal is the identical double the init frame carried);
+            saves the init-rank checkpoint and the first join round.
+            """
+            if prev_ranks is None:
+                contrib = adj.select(
+                    "dst", (F.lit(1.0 / n_nodes) / F.col("deg")).alias("c")
+                )
+            else:
+                contrib = adj.join(prev_ranks, adj.src == prev_ranks.node).select(
+                    "dst", (F.col("rank") / F.col("deg")).alias("c")
+                )
+            return (
+                contrib
+                .groupBy("dst")
+                .agg(F.sum("c").alias("inflow"))
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.lit(base) + F.lit(damping) * F.col("inflow")).alias("rank"),
+                )
+            )
+
+        ranks, _ = st.iterate(
+            one_iter, None, max_iter=max_iter, rounds_per_job=ROUNDS_PER_JOB, name="ranks"
         )
-        if run_dir is None:
-            adj.unpersist()
-            _release_local_checkpoint(both)
-        return ranks.select(F.col("node").alias("doc_id"), "rank")
-    if run_dir is None:
-        # final ranks are checkpointed; the adjacency cache and the
-        # edge/degree checkpoints that fed it have no consumer left
-        adj.unpersist()
-        _release_local_checkpoint(both)
-        _release_local_checkpoint(deg)
-    return ranks.select(F.col("node").alias("doc_id"), "rank")
+        if ranks is None:
+            # max_iter == 0: the uniform initialization, lazy over deg
+            return st.result(
+                deg.select(F.col("src").alias("doc_id"), F.lit(1.0 / n_nodes).alias("rank")),
+                deg,
+            )
+        return st.result(ranks.select(F.col("node").alias("doc_id"), "rank"), ranks)
 
 
 def near_match_values(

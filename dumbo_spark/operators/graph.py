@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from dumbo_spark.operators._checkpoint import _release_local_checkpoint
+from dumbo_spark.operators._checkpoint import Staging, _release_local_checkpoint
 
 
 def copurchase_triangles(
@@ -467,8 +467,8 @@ def ktruss_edges(
 
     Scale shape per round: one ordered-wedge triangle enumeration
     (the copurchase_triangles plan, triangle-bounded) + a left join
-    back to the edge list; lineage truncated per round via
-    localCheckpoint like the other iterative operators. Edges only
+    back to the edge list; one round per job through the shared round
+    loop (``_checkpoint.Staging.iterate``). Edges only
     shrink, so convergence is monotone; the oracle replays EXACTLY
     ``max_iter`` peels (post-fixpoint rounds are no-ops), so engine
     and SQL agree whether or not the fixpoint arrives early.
@@ -476,58 +476,56 @@ def ktruss_edges(
     Output: (part_a, part_b, support) — surviving oriented edges and
     their final triangle counts.
     """
-    # lazy checkpoint: the count materializes it in the same job
-    edges = _copurchase_edges(lineitem, min_cooccur, max_basket).localCheckpoint(
-        eager=False
-    )
-    n_edges = edges.count()
-    backing = edges  # the checkpoint holding the current edge set's blocks
-    final = None
-    for _ in range(max_iter):
-        supp = _edge_support(edges)
+    with Staging() as st:
+        # lazy checkpoint: the count materializes it in the same job
+        edges = st.stage(_copurchase_edges(lineitem, min_cooccur, max_basket), "edges")
+        n_edges = edges.count()
+
+        def peeled_nothing(kept):
+            # full count: materializes every partition of the lazy
+            # checkpoint in the same job (one job per round)
+            nonlocal n_edges
+            n_before, n_edges = n_edges, kept.count()
+            return n_edges == n_before
+
         # carry the support through the checkpoint: when the peel is a
         # no-op (the common exit), the surviving edge set IS the set the
         # supports were computed on, so the final per-edge supports are
-        # already in hand — the old epilogue re-ran the whole triangle
-        # enumeration once more to recover a column this round computed
-        kept = (
-            edges.join(
-                supp,
-                (edges["src"] == supp["es"]) & (edges["dst"] == supp["ed"]),
-                "left",
-            )
-            .select(
-                "src", "dst", F.coalesce(F.col("supp"), F.lit(0)).alias("supp")
-            )
-            .where(F.col("supp") >= k - 2)
-            # lazy: the full count below materializes every partition in
-            # the same job (one job/round instead of checkpoint + count)
-            .localCheckpoint(eager=False)
+        # already in hand — no re-run of the triangle enumeration
+        kept, converged = st.iterate(
+            lambda cur: _with_support(cur.select("src", "dst")).where(
+                F.col("supp") >= k - 2
+            ),
+            edges,
+            max_iter=max_iter,
+            rounds_per_job=1,
+            name="edges",
+            probe=peeled_nothing,
         )
-        n_kept = kept.count()
-        _release_local_checkpoint(backing)  # stale round, no consumer left
-        backing = kept
-        edges = kept.select("src", "dst")
-        if n_kept == n_edges:
-            final = kept
-            break
-        n_edges = n_kept
-    if final is None:
         # max_iter exhausted mid-peel: the last round removed edges, so
         # its supports are stale for the survivors — recompute once on
         # the final set (the oracle replays exactly max_iter peels, so
         # both engines land here together)
-        final_supp = _edge_support(edges)
-        final = edges.join(
-            final_supp,
-            (edges["src"] == final_supp["es"]) & (edges["dst"] == final_supp["ed"]),
-            "left",
-        ).select("src", "dst", F.coalesce(F.col("supp"), F.lit(0)).alias("supp"))
-    return final.select(
-        F.col("src").alias("part_a"),
-        F.col("dst").alias("part_b"),
-        F.col("supp").cast("int").alias("support"),
-    )
+        final = kept if converged else _with_support(kept.select("src", "dst"))
+        return st.result(
+            final.select(
+                F.col("src").alias("part_a"),
+                F.col("dst").alias("part_b"),
+                F.col("supp").cast("int").alias("support"),
+            ),
+            kept,
+        )
+
+
+def _with_support(edges: DataFrame) -> DataFrame:
+    """(src, dst, supp): each edge with its triangle support (0 when
+    it closes no triangle)."""
+    supp = _edge_support(edges)
+    return edges.join(
+        supp,
+        (edges["src"] == supp["es"]) & (edges["dst"] == supp["ed"]),
+        "left",
+    ).select("src", "dst", F.coalesce(F.col("supp"), F.lit(0)).alias("supp"))
 
 
 def clustering_coefficient(

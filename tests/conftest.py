@@ -68,6 +68,19 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """One line in every default-tier run (also under ``-q``) so the
+    size of the skipped full tier stays visible."""
+    n = sum(
+        "full tier: set SPARK_GRAFT_FULL_TESTS=1" in str(rep.longrepr)
+        for rep in terminalreporter.stats.get("skipped", [])
+    )
+    if n:
+        terminalreporter.write_line(
+            f"full tier skipped: {n} tests (set SPARK_GRAFT_FULL_TESTS=1)"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from dumbo_spark.session import get_session

@@ -106,10 +106,16 @@ def test_pagerank_empty_edge_set_returns_empty(spark):
     """r11 guard: PageRank over an EDGELESS graph (no verified
     near-dup pairs anywhere) returns an empty frame instead of
     dividing by zero nodes."""
+    from dumbo_spark.session import release_persistent_rdds
+
+    release_persistent_rdds(spark)  # isolate from other tests' blocks
+    pinned_before = spark.sparkContext._jsc.getPersistentRDDs().size()
     edges = spark.createDataFrame([], "doc_a long, doc_b long")
     out = dedup.pagerank(edges, max_iter=3)
     assert out.collect() == []
     assert [f.name for f in out.schema.fields] == ["doc_id", "rank"]
+    # the early return still releases the edge and degree checkpoints
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == pinned_before
 
 
 def test_simhash_near_dup_pairs(spark):
@@ -459,6 +465,26 @@ def test_pagerank_star_and_pair(spark):
     assert abs(got[2] - leaf_expect) < 2e-3
 
 
+def _py_pagerank(pairs, max_iter=10, d=0.85):
+    """Pure-Python power iteration over an undirected multigraph — the
+    independent reference for dedup.pagerank."""
+    adj: dict = {}
+    for a, b in pairs:
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
+    n = len(adj)
+    ranks = {v: 1.0 / n for v in adj}
+    base = (1.0 - d) / n
+    for _ in range(max_iter):
+        inflow = {v: 0.0 for v in adj}
+        for v, nbrs in adj.items():
+            c = ranks[v] / len(nbrs)
+            for u in nbrs:
+                inflow[u] += c
+        ranks = {v: base + d * inflow[v] for v in adj}
+    return ranks
+
+
 def test_pagerank_random_graphs_match_reference(spark):
     """Randomized differential for the hoisted-adjacency PageRank: on
     seeded random multigraphs (duplicate edges = parallel edges, both
@@ -466,23 +492,6 @@ def test_pagerank_random_graphs_match_reference(spark):
     every rank must match an independent pure-Python power iteration
     to float tolerance, and Σrank = 1."""
     import random
-
-    def py_pagerank(pairs, max_iter=10, d=0.85):
-        adj: dict = {}
-        for a, b in pairs:
-            adj.setdefault(a, []).append(b)
-            adj.setdefault(b, []).append(a)
-        n = len(adj)
-        ranks = {v: 1.0 / n for v in adj}
-        base = (1.0 - d) / n
-        for _ in range(max_iter):
-            inflow = {v: 0.0 for v in adj}
-            for v, nbrs in adj.items():
-                c = ranks[v] / len(nbrs)
-                for u in nbrs:
-                    inflow[u] += c
-            ranks = {v: base + d * inflow[v] for v in adj}
-        return ranks
 
     rng = random.Random(1207)
     for trial in range(2):
@@ -494,7 +503,7 @@ def test_pagerank_random_graphs_match_reference(spark):
         pairs = [(a, b) for a, b in pairs if a != b]  # no self-edges
         if not pairs:
             pairs = [(0, 1)]
-        want = py_pagerank(pairs)
+        want = _py_pagerank(pairs)
         edges = spark.createDataFrame(pairs, "doc_a long, doc_b long")
         got = {r.doc_id: r.rank for r in dedup.pagerank(edges, max_iter=10).collect()}
         assert set(got) == set(want), f"trial {trial}: node sets differ"

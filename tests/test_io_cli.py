@@ -146,7 +146,7 @@ def test_claim_run_dir_rejects_uri_schemes(tmp_path):
     rather than create stray local dirs with no real mutual exclusion."""
     import pytest
 
-    from dumbo_spark.operators.dedup import _claim_run_dir
+    from dumbo_spark.operators._checkpoint import _claim_run_dir
 
     for uri in ("hdfs://nn/tmp/runs", "s3a://bucket/runs"):
         with pytest.raises(ValueError, match="local path"):

@@ -42,17 +42,6 @@ def test_release_local_checkpoint_silent_on_success(spark, caplog):
     assert not caplog.records
 
 
-def test_checkpoint_helpers_shared_not_duplicated():
-    """graph.py and dedup.py must use the SAME helper object (promoted
-    to operators/_checkpoint.py) — not a cross-module private import or
-    a copy that could drift."""
-    from dumbo_spark.operators import graph
-
-    assert graph._release_local_checkpoint is _checkpoint._release_local_checkpoint
-    assert dedup._release_local_checkpoint is _checkpoint._release_local_checkpoint
-    assert dedup._claim_run_dir is _checkpoint._claim_run_dir
-
-
 def test_release_persistent_rdds_is_a_runtime_utility():
     """bench.py imports its timing primitive (which releases persistent
     RDDs) from session.py so a bench-only environment without

@@ -94,64 +94,6 @@ def test_selfrepeat_plan_stays_jvm_side(spark, sf_dir):
     assert s["bnl_joins"] == 0
 
 
-def test_connected_components_chain_values_identical(spark):
-    """r15 `chain` (rounds fused per materialize job) is a pure
-    scheduling change: labels identical for chain 1/2/3 on a graph
-    with a deep path (multi-chunk convergence), a triangle, and
-    isolated islands."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7),  # path, diam 6
-         (20, 21), (21, 22), (22, 20),                     # triangle
-         (30, 31)],                                        # island
-        "doc_a long, doc_b long",
-    )
-    results = [
-        {
-            (r.doc_id, r.cluster_id)
-            for r in dedup.connected_components(edges, chain=c).collect()
-        }
-        for c in (1, 2, 3)
-    ]
-    assert results[0] == results[1] == results[2]
-    assert {c for _, c in results[0]} == {1, 20, 30}
-
-
-def test_connected_components_chain_keeps_nonconvergence_raise(spark):
-    """The max_iter safety valve counts PROPAGATION ROUNDS, not jobs:
-    a diameter-8 path still raises at max_iter=3 under chain=2 (3
-    rounds applied: chunks of 2+1), and converges with the default."""
-    import pytest
-
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 9)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(edges, max_iter=3, chain=2)
-    got = {
-        (r.doc_id, r.cluster_id)
-        for r in dedup.connected_components(edges, chain=2).collect()
-    }
-    assert got == {(i, 1) for i in range(1, 10)}
-
-
-def test_pagerank_chain_values_identical(spark):
-    """pagerank `chain` fuses iterations into one lazy plan per
-    checkpoint; the IEEE arithmetic sequence is unchanged, so ranks
-    must be bit-identical for chain 1/2/3 (including odd max_iter,
-    which exercises the short final chunk)."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4), (10, 11)],
-        "doc_a long, doc_b long",
-    )
-    for iters in (1, 5):
-        ranks = [
-            {r.doc_id: r.rank
-             for r in dedup.pagerank(edges, max_iter=iters, chain=c).collect()}
-            for c in (1, 2, 3)
-        ]
-        assert ranks[0] == ranks[1] == ranks[2]
-
-
 def test_containment_join_zero_gram_docs_excluded(spark):
     """r15 cache fix moved the `_n > 0` filter ABOVE the gram-table
     persist (the pushed-down form re-inlined the tokenize chain into
